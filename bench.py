@@ -169,14 +169,6 @@ def run_queries(spark, docs, postings, terms, docstats):
         ).collect(),
         reps=5,
     )
-    timed(
-        "q_bm25_wand_probe",
-        lambda: codec.bm25_topk_wand(
-            comp, dlb, terms, ["spark", "fast", "table"], 10, n, avgdl,
-            global_probe=True,
-        ).collect(),
-        reps=5,
-    )
     # batched BM25 (query-log / evaluation workload): 8 queries as ONE
     # plan (single posting scan, broadcast fan-out, per-query window rank)
     # vs 8 sequential jobs — the amortization ratio is the point; at

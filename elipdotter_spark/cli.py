@@ -293,18 +293,24 @@ def _docmap_latest(dm):
 
     Streamed docmaps are per-batch dirs (``batch-%06d``), so a recrawled
     page legitimately carries several rows for the same hashed doc_id and
-    readers must take the latest (the stream help text's contract).  The
-    zero-padded batch dir name orders lexicographically in the source
-    file path, so ``max_by`` over ``_metadata.file_path`` picks the
-    newest batch's row; a single-write docmap has one row per doc and
-    passes through unchanged.  Without this, the --resolve-urls map and
-    the --site restrict set kept an ARBITRARY collected row
-    (ADVICE r6)."""
+    readers must take the latest (the stream help text's contract).
+    ``max_by`` orders on the NUMERIC batch ordinal parsed from the source
+    file path — the zero padding stops at six digits, so the raw path
+    would sort ``batch-1000000`` before ``batch-999999`` — with the path
+    itself as the tiebreak; a single-write docmap (no ``batch-`` dir,
+    ordinal -1) has one row per doc and passes through unchanged.
+    Without this, the --resolve-urls map and the --site restrict set kept
+    an ARBITRARY collected row."""
     from pyspark.sql import functions as F
 
     cols = [c for c in dm.columns if c != "doc_id"]
+    src = F.col("_metadata.file_path")
+    ordinal = F.coalesce(
+        F.regexp_extract(src, r".*batch-(\d+)", 1).try_cast("long"),
+        F.lit(-1).cast("long"),
+    )
     return (
-        dm.withColumn("_src", F.col("_metadata.file_path"))
+        dm.withColumn("_src", F.struct(ordinal.alias("o"), src.alias("p")))
         .groupBy("doc_id")
         .agg(
             F.max_by(
@@ -512,36 +518,30 @@ def cmd_bm25(args) -> int:
                 "prior": float(r.prior), "fused": float(r.fused),
             }))
         return 0
-    if args.wand:
-        # one-job distributed block-max WAND over the compressed format —
-        # read the published block tables when FRESH (publish() stamps the
-        # block tables' own blocks_max_seq — tracked separately from the
-        # terms/docstats stamp, since publish(with_compressed=False)
-        # refreshes those but not the blocks), else derive on the fly so
-        # --wand and the default path always agree
-        # resolve the (round-6 versioned) block dirs through the meta —
-        # a plain-name probe would miss a versioned publish entirely
-        bp = store._artifact_path("blocks", snap.meta)
-        dp = store._artifact_path("doclen_blocks", snap.meta)
-        if not snap.blocks_stale and os.path.isdir(bp) and os.path.isdir(dp):
-            # resolves delta block segments (publish_delta) when present;
-            # a base-only store passes through unchanged
-            comp, dlb = snap.wand_tables(terms, n, avgdl)
-        else:
-            print(
-                "warning: published block tables are stale or absent; "
-                "deriving them on the fly — re-run publish() to refresh",
-                file=sys.stderr,
-            )
-            # auto-span, not the dense default: a hashed-id store would
-            # otherwise degenerate to ~1 doc per range
-            span = store._auto_doc_span(docstats, n)
-            comp = codec.build_compressed(
-                postings, docstats, terms, n, avgdl, doc_span=span
-            ).cache()
-            dlb = codec.build_doclen_blocks(docstats, doc_span=span).cache()
+    # one-job distributed block-max WAND over the published compressed
+    # blocks when they are FRESH (publish() stamps the block tables' own
+    # blocks_max_seq — tracked separately from the terms/docstats stamp,
+    # since publish(with_compressed=False) refreshes those but not the
+    # blocks).  Stale or absent blocks fall back to the exhaustive
+    # aggregate, which reads only the query terms' postings — the same
+    # rule federation applies per shard.  The block dirs resolve through
+    # the meta: a plain-name probe would miss a versioned publish.
+    wand = args.wand and not snap.blocks_stale and all(
+        os.path.isdir(store._artifact_path(a, snap.meta))
+        for a in ("blocks", "doclen_blocks")
+    )
+    if wand:
+        # resolves delta block segments (publish_delta) when present;
+        # a base-only store passes through unchanged
+        comp, dlb = snap.wand_tables(terms, n, avgdl)
         topk = codec.bm25_topk_wand(comp, dlb, terms, qterms, args.k, n, avgdl)
     else:
+        if args.wand:
+            print(
+                "warning: published block tables are stale or absent; "
+                "scoring exhaustively — re-run publish() to refresh",
+                file=sys.stderr,
+            )
         topk = bm25.bm25_topk(postings, docstats, terms, qterms, args.k, n=n, avgdl=avgdl)
     for r in topk.collect():
         print(json.dumps({"doc_id": r.doc_id, "score": float(r.score)}))

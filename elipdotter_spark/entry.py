@@ -778,12 +778,15 @@ def q_ft_bm25_batch(spark, sf_dir):
 
 def q_ft_bm25_batch_pruned(spark, sf_dir):
     """Same result through the block-max batch prune (per-query theta derived
-    inside the plan, no driver round-trip between phases)."""
+    inside the plan, no driver round-trip between phases), bounded by the
+    compressed block table's own (term, block, block_max) columns."""
+    from .operators import codec
+
     t = _tables(spark, sf_dir)
-    bm = bm25.build_block_max(
+    bm = codec.build_compressed(
         t["postings"], t["docstats"], t["terms"], t["n"], t["avgdl"],
-        block_size=64,
-    )
+        doc_span=64,
+    ).select("term", "block", "block_max")
     top = bm25.bm25_topk_blockmax_batch(
         t["postings"], t["docstats"], t["terms"], bm, BATCH_QUERIES, BATCH_K,
         t["n"], t["avgdl"], block_size=64, probe_blocks=4,
@@ -1729,25 +1732,33 @@ def q_zipf_dd_exact(spark, sf_dir):
     return dedup.exact_dup_groups(_zipf_tables(spark)["docs"])
 
 
-def q_zipf_bm25_compressed(spark, sf_dir):
-    """Distributed compressed-block BM25 top-50 (block-max skipping,
-    mapInPandas decode, in-plan doc_len join) — must equal the exhaustive
-    DuckDB BM25 top-50 on the same corpus."""
+def _zipf_wand_tables(spark, t):
+    """(compressed, doclen) blocks over the Zipf corpus at doc_span=16 —
+    125 ranges, cached once and shared by both WAND gates."""
     from .operators import codec
 
-    t = _zipf_tables(spark)
-    key = f"zipf_comp:{_spark_key(spark)}"
-    if key not in _CACHE:
-        _CACHE[key] = codec.build_compressed(
+    ckey = f"zipf_comp:{_spark_key(spark)}"
+    dkey = f"zipf_dlb:{_spark_key(spark)}"
+    if ckey not in _CACHE:
+        _CACHE[ckey] = codec.build_compressed(
             t["postings"], t["docstats"], t["terms"], t["n"], t["avgdl"],
             doc_span=16,
         ).cache()
-    comp = _CACHE[key]
-    # doc_span=16 -> 125 ranges; k=probe=20 skips ~100 of them in phase 2
-    # (the oracle verifies the pruned result equals the exhaustive top-k)
-    topk, _pruned = codec.bm25_topk_compressed_df(
-        comp, t["docstats"], t["terms"], ["w1", "w800", "w3000"], 20,
-        t["n"], t["avgdl"], probe_ranges=20,
+    if dkey not in _CACHE:
+        _CACHE[dkey] = codec.build_doclen_blocks(t["docstats"], doc_span=16).cache()
+    return _CACHE[ckey], _CACHE[dkey]
+
+
+def q_zipf_bm25_compressed(spark, sf_dir):
+    """Distributed compressed-block BM25 top-20 through the block-max WAND
+    kernel — must equal the exhaustive DuckDB BM25 top-20 on the same
+    corpus."""
+    from .operators import codec
+
+    t = _zipf_tables(spark)
+    comp, dlb = _zipf_wand_tables(spark, t)
+    topk = codec.bm25_topk_wand(
+        comp, dlb, t["terms"], ["w1", "w800", "w3000"], 20, t["n"], t["avgdl"],
     )
     return topk.select("doc_id", F.round("score", 6).alias("score"))
 
@@ -1758,18 +1769,9 @@ def q_zipf_bm25_wand(spark, sf_dir):
     from .operators import codec
 
     t = _zipf_tables(spark)
-    ckey = f"zipf_comp:{_spark_key(spark)}"
-    dkey = f"zipf_dlb:{_spark_key(spark)}"
-    if ckey not in _CACHE:
-        _CACHE[ckey] = codec.build_compressed(
-            t["postings"], t["docstats"], t["terms"], t["n"], t["avgdl"],
-            doc_span=16,
-        ).cache()
-    if dkey not in _CACHE:
-        _CACHE[dkey] = codec.build_doclen_blocks(t["docstats"], doc_span=16).cache()
+    comp, dlb = _zipf_wand_tables(spark, t)
     topk = codec.bm25_topk_wand(
-        _CACHE[ckey], _CACHE[dkey], t["terms"], ["w1", "w800", "w3000"], 10,
-        t["n"], t["avgdl"],
+        comp, dlb, t["terms"], ["w1", "w800", "w3000"], 10, t["n"], t["avgdl"],
     )
     return topk.select("doc_id", F.round("score", 6).alias("score"))
 

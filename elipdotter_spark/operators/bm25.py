@@ -8,12 +8,15 @@ the hot path):
 - ``idf = ln((N - df + 0.5)/(df + 0.5) + 1)`` (Lucene/ATIRE positive variant)
 - ``score(d) = sum_t idf_t * tf*(k1+1)/(tf + k1*(1 - b + b*dl/avgdl))``
 
-Scale path: per-(term, doc-block) max-impact metadata (``block_max``) enables
-block-max WAND-style pruning: a first pass scores only the most promising
-blocks to obtain a threshold theta (the k-th best score), then only blocks
-whose upper bound ``sum_t blockmax(t, block) >= theta`` are scored exactly.
-At 10^12 docs this skips the long tail of low-impact posting blocks; the
-pruned plan is verified equal to the exhaustive one in tests.
+Scale path: per-(term, doc-range) max-impact metadata (``block_max``, carried
+by the compressed blocks of ``codec.build_compressed``) enables block-max
+pruning.  Single queries run ``codec.bm25_topk_wand``; query batches run
+:func:`bm25_topk_blockmax_batch`, which first scores only the most promising
+blocks per query to obtain a threshold theta (the k-th best score), then
+scores exactly only blocks whose upper bound
+``sum_t blockmax(t, block) >= theta``.  The exhaustive operators stay as the
+fallback for stale blocks and as the reference the pruned plans are tested
+against.
 """
 
 from __future__ import annotations
@@ -24,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 K1 = 1.2
 B = 0.75
-DEFAULT_BLOCK_SIZE = 128
 
 
 def corpus_stats(docstats: DataFrame):
@@ -261,14 +263,20 @@ def bm25_topk_blockmax_batch(
     k: int,
     n: int,
     avgdl: float,
-    block_size: int = DEFAULT_BLOCK_SIZE,
+    block_size: int,
     probe_blocks: int = 64,
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
-    """Batched block-max pruned top-k — the per-query two-phase prune of
-    :func:`bm25_topk_blockmax`, with theta derived PER QUERY inside the plan
-    (no driver collect between phases; the whole batch is one lazy plan).
+    """Batched block-max pruned top-k, with theta derived PER QUERY inside
+    the plan (no driver collect between phases; the whole batch is one lazy
+    plan).
+
+    ``block_max`` is (term, block, block_max) keyed by
+    ``codec.range_expr(block_size)`` — in practice the compressed block
+    table's own columns, so ``block_size`` MUST be the ``doc_span`` it was
+    built with: a mismatched span joins impacts to the wrong block ids and
+    prunes docs that belong in the top-k.
 
     Phase 1 probes, per query, the ``probe_blocks`` blocks with the highest
     summed block-max upper bound and scores them exactly; theta(q) is the
@@ -330,89 +338,3 @@ def bm25_topk_blockmax_batch(
         .agg(F.sum("impact").alias("score"))
     )
     return _rank_topk(phase2, k)
-
-
-# ------------------------------------------------------------- block-max WAND
-
-
-def build_block_max(
-    postings: DataFrame,
-    docstats: DataFrame,
-    terms: DataFrame,
-    n: int,
-    avgdl: float,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """Materialized per-(term, block) max impact — the ``block_max_score``
-    metadata (index-build side-table, rebuilt with the index)."""
-    from .codec import range_expr
-
-    imp = term_impacts(postings, docstats, terms, n, avgdl, k1, b)
-    return (
-        imp.withColumn("block", range_expr(block_size))
-        .groupBy("term", "block")
-        .agg(F.max("impact").alias("block_max"))
-    )
-
-
-def bm25_topk_blockmax(
-    spark: SparkSession,
-    postings: DataFrame,
-    docstats: DataFrame,
-    terms: DataFrame,
-    block_max: DataFrame,
-    query_terms: Sequence[str],
-    k: int,
-    n: int,
-    avgdl: float,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    probe_blocks: int = 64,
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """Two-phase block-max pruned top-k.
-
-    Phase 1: score the ``probe_blocks`` blocks with the highest upper bound
-    exactly -> threshold theta = k-th best score found.
-    Phase 2: exact-score only blocks with upper bound >= theta.
-    Result provably equals exhaustive top-k: any doc outside the surviving
-    blocks has score <= its block's upper bound < theta <= true k-th score.
-    """
-    from .codec import range_expr
-
-    qterms = list(dict.fromkeys(query_terms))
-    bounds = (
-        block_max.filter(F.col("term").isin(qterms))
-        .groupBy("block")
-        .agg(F.sum("block_max").alias("ub"))
-    )
-
-    probe = [r.block for r in bounds.orderBy(F.desc("ub")).limit(probe_blocks).collect()]
-    if not probe:
-        return bm25_topk(postings, docstats, terms, qterms, k, n=n, avgdl=avgdl)
-
-    block_col = range_expr(block_size)
-    phase1 = bm25_scores(
-        postings.filter(block_col.isin(probe)),
-        docstats,
-        terms,
-        qterms,
-        n=n,
-        avgdl=avgdl,
-        k1=k1,
-        b=b,
-    )
-    top1 = phase1.orderBy(F.desc("score")).limit(k).collect()
-    theta = float(top1[-1].score) if len(top1) >= k else float("-inf")
-
-    surviving = bounds.filter(F.col("ub") >= theta).select("block")
-    pruned_postings = postings.withColumn("block", block_col).join(
-        F.broadcast(surviving), "block"
-    )
-    return (
-        bm25_scores(pruned_postings, docstats, terms, qterms, n=n, avgdl=avgdl, k1=k1, b=b)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )

@@ -1,10 +1,10 @@
 """Compressed posting-block codec: docID delta + varint, per-block max score.
 
 North-rule component: the query-side block format.  Parquet already
-delta/RLE-encodes the published table; this codec packs each (term, block) of
-``BLOCK`` postings into two varint byte strings (delta-encoded doc ids, tfs)
-plus ``block_max`` (the block's maximum BM25 impact) — the structure a
-block-max WAND scan skips over without decoding.
+delta/RLE-encodes the published table; this codec packs each (term, doc range)
+posting block into two varint byte strings (delta-encoded doc ids, tfs) plus
+``block_max`` (the block's maximum BM25 impact) — the structure a block-max
+WAND scan skips over without decoding.
 
 Encode/decode are numpy-vectorized per Arrow batch (no per-row Python in the
 Spark path); the byte format is byte-identical to classic LEB128 varints.
@@ -26,8 +26,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-DEFAULT_BLOCK = 128
 
 BLOCK_SCHEMA = StructType(
     [
@@ -271,190 +269,6 @@ def qterm_blocks(compressed: DataFrame, qterms) -> DataFrame:
     )
 
 
-# ------------------------------------------------------- query (block-max)
-
-
-DECODED_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("tf", LongType(), False),
-    ]
-)
-
-
-def decoded_postings(blocks: DataFrame) -> DataFrame:
-    """(term, doc_id, tf) — decode compressed blocks in Arrow-batched
-    partitions (vectorized varint unpack, numpy concatenate; no per-posting
-    Python).  This is the distributed consumer of the block format: decode
-    happens on the executors that hold the blocks."""
-
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms_out: List[np.ndarray] = []
-            ids_out: List[np.ndarray] = []
-            tfs_out: List[np.ndarray] = []
-            for term, cnt, first, dd, tfb in zip(
-                pdf["term"],
-                pdf["n"].values,
-                pdf["first_doc"].values,
-                pdf["doc_deltas"],
-                pdf["tfs"],
-            ):
-                ids, tfs = decode_block(int(first), dd, tfb, int(cnt))
-                terms_out.append(np.full(len(ids), term, dtype=object))
-                ids_out.append(ids)
-                tfs_out.append(tfs)
-            if not ids_out:
-                yield pd.DataFrame(
-                    {
-                        "term": pd.Series([], dtype=object),
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "tf": pd.Series([], dtype="int64"),
-                    }
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(terms_out),
-                    "doc_id": np.concatenate(ids_out).astype("int64"),
-                    "tf": np.concatenate(tfs_out).astype("int64"),
-                }
-            )
-
-    return blocks.mapInPandas(unpack, schema=DECODED_SCHEMA)
-
-
-def _scores_from_blocks(
-    blocks: DataFrame,
-    docstats: DataFrame,
-    idf: DataFrame,
-    avgdl: float,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    """Decode -> broadcast idf join -> in-plan doc_len join -> per-doc sum.
-    All scoring math is JVM expressions; Python touches only the varint
-    unpack."""
-    dec = decoded_postings(blocks)
-    return (
-        dec.join(F.broadcast(idf), "term")
-        .join(docstats, "doc_id")
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (
-                F.col("tf")
-                + k1 * (1.0 - b + b * F.col("doc_len") / F.lit(float(avgdl)))
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-
-
-def bm25_topk_compressed_df(
-    compressed: DataFrame,
-    docstats: DataFrame,
-    terms: DataFrame,
-    query_terms: Sequence[str],
-    k: int,
-    n: int,
-    avgdl: float,
-    k1: float = 1.2,
-    b: float = 0.75,
-    probe_ranges: int = None,
-) -> Tuple[DataFrame, int]:
-    """Distributed top-k BM25 over the compressed range-aligned blocks with
-    block-max skipping — the scale-path consumer of the codec (block-skipping
-    intent of the reference's Lossless fast path, src/index.rs:1012-1016).
-
-    - ub(range) = sum of the query terms' block maxes in that range — an
-      upper bound on any contained doc's score (sound because blocks are
-      doc-range aligned: a doc's whole score lives in one range);
-    - phase 1 (one distributed job): fully score the ``probe_ranges``
-      highest-ub ranges; collect only the top-k rows -> theta = k-th best
-      *true* score;
-    - phase 2 (one distributed job): decode + score only ranges with
-      ub >= theta; phase-1's top-k rides back in as a k-row literal (any
-      phase-1 doc below theta is dominated by the k docs at >= theta).
-
-    No driver-side scoring and no docstats collect — doc_len joins in-plan;
-    the only driver round-trips are the probe-range ids and the k-row theta
-    collect.  Returns (top-k DataFrame(doc_id, score), n_ranges_pruned) —
-    provably equal to the exhaustive top-k."""
-    from .bm25 import _idf_col
-
-    spark = compressed.sparkSession
-    qterms = list(dict.fromkeys(query_terms))
-    blk = qterm_blocks(compressed, qterms)
-    idf = terms.filter(F.col("term").isin(qterms)).select(
-        "term", _idf_col(n).alias("idf")
-    )
-    bounds = blk.groupBy("block").agg(F.sum("block_max").alias("ub"))
-
-    n_probe = max(1, k if probe_ranges is None else probe_ranges)
-    probe = [
-        r.block
-        for r in bounds.orderBy(F.desc("ub"), F.asc("block")).limit(n_probe).collect()
-    ]
-    empty = spark.createDataFrame([], schema="doc_id long, score double")
-    if not probe:
-        return empty, 0
-
-    phase1 = _scores_from_blocks(
-        blk.filter(F.col("block").isin(probe)), docstats, idf, avgdl, k1, b
-    )
-    top1 = phase1.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    theta = float(top1[-1].score) if len(top1) >= k else float("-inf")
-
-    stats = bounds.agg(
-        F.count("*").alias("total"),
-        F.sum(
-            F.when(
-                ~F.col("block").isin(probe) & (F.col("ub") >= theta), 1
-            ).otherwise(0)
-        ).alias("survived"),
-    ).collect()[0]
-    pruned = int(stats.total) - len(probe) - int(stats.survived or 0)
-
-    surviving = bounds.filter(
-        ~F.col("block").isin(probe) & (F.col("ub") >= theta)
-    ).select("block")
-    phase2 = _scores_from_blocks(
-        blk.join(F.broadcast(surviving), "block"), docstats, idf, avgdl, k1, b
-    )
-    phase1_top = spark.createDataFrame(
-        [(int(r.doc_id), float(r.score)) for r in top1],
-        schema="doc_id long, score double",
-    ) if top1 else empty
-    final = (
-        phase1_top.unionByName(phase2)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return final, pruned
-
-
-def bm25_topk_compressed(
-    compressed: DataFrame,
-    docstats: DataFrame,
-    terms: DataFrame,
-    query_terms: Sequence[str],
-    k: int,
-    n: int,
-    avgdl: float,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> Tuple[List[Tuple[int, float]], int]:
-    """Collected form of :func:`bm25_topk_compressed_df` (top-k is small)."""
-    df, pruned = bm25_topk_compressed_df(
-        compressed, docstats, terms, query_terms, k, n, avgdl, k1, b
-    )
-    return [(int(r.doc_id), float(r.score)) for r in df.collect()], pruned
-
-
 # ------------------------------------------------- one-job partitioned WAND
 
 # sentinel "term" under which per-range doc lengths are stored in the same
@@ -541,33 +355,6 @@ WAND_SCHEMA = StructType(
 )
 
 
-def theta0_for_query_stream(prev_terms, prev_kth_score, query_terms, prev_k, k,
-                            prev_n_results=None):
-    """Warm-start threshold for a query STREAM: the previous query's k-th
-    score is a valid ``theta0`` for the current query iff the current term
-    set CONTAINS the previous one (BM25 per-doc scores are monotone in
-    added terms — every doc that scored >= prev_kth still does) and the
-    current k is not larger than the previous (>= k docs must clear the
-    bound).  Returns None when reuse would be unsound — callers pass the
-    result straight to ``bm25_topk_wand(theta0=...)``.
-
-    PRECONDITION: ``prev_kth_score`` must be the true ``prev_k``-th best
-    score.  If the previous query returned FEWER than ``prev_k`` rows, its
-    last row's score is NOT that bound (fewer than k docs clear it, and a
-    seeded WAND could prune true top-k docs) — pass ``prev_n_results`` and
-    the helper refuses reuse instead of trusting the caller to remember.
-
-    The incremental-typing / query-refinement shape ("spark", then
-    "spark fast") is exactly this containment."""
-    if prev_kth_score is None or k > prev_k:
-        return None
-    if prev_n_results is not None and prev_n_results < prev_k:
-        return None
-    if not set(prev_terms) <= set(query_terms):
-        return None
-    return float(prev_kth_score)
-
-
 def bm25_topk_wand(
     compressed: DataFrame,
     doclen_blocks: DataFrame,
@@ -579,8 +366,6 @@ def bm25_topk_wand(
     k1: float = 1.2,
     b: float = 0.75,
     with_stats: bool = False,
-    theta0: float = None,
-    global_probe: bool = False,
     idf_map: dict = None,
 ) -> DataFrame:
     """Single-job distributed block-max WAND — zero driver round-trips
@@ -598,15 +383,6 @@ def bm25_topk_wand(
     survivors feed one TakeOrderedAndProject.  The only driver-side data is
     the W-row idf map for the query's own terms.
 
-    ``theta0``: an externally-known TRUE score achieved by >= k docs (e.g.
-    from a previous probe) — seeds every partition's threshold, tightening
-    pruning beyond local thetas while staying exact: a range with ub < theta0
-    only holds docs strictly below the final k-th score.  ``global_probe``
-    computes such a theta0 with one extra tiny job (decode + score ONLY the
-    single highest-ub range, collect k rows) — trading the zero-round-trip
-    property for global pruning; the probed range itself is never skipped
-    (its ub is the global max >= theta0).
-
     With ``with_stats`` the survivors keep (rng_scanned, rng_total)
     per-partition counters instead of being cut to the global top-k."""
     import heapq
@@ -614,6 +390,7 @@ def bm25_topk_wand(
     from .bm25 import _idf_col
 
     qterms = list(dict.fromkeys(query_terms))
+    qset = set(qterms)
     if idf_map is None:
         idf_rows = (
             terms.filter(F.col("term").isin(qterms))
@@ -624,32 +401,12 @@ def bm25_topk_wand(
     else:
         # caller-supplied (term -> idf) under the SAME n — federation
         # computes it once instead of one tiny collect job per shard
-        idf_map = {t: float(v) for t, v in idf_map.items() if t in set(qterms)}
+        idf_map = {t: float(v) for t, v in idf_map.items() if t in qset}
     k1f, bf, avg = float(k1), float(b), float(avgdl)
 
     blk = qterm_blocks(compressed, qterms).unionByName(
         doclen_blocks.select(*[f.name for f in BLOCK_SCHEMA.fields])
     )
-
-    if global_probe and theta0 is None:
-        best = (
-            qterm_blocks(compressed, qterms)
-            .groupBy("block")
-            .agg(F.sum("block_max").alias("ub"))
-            .orderBy(F.desc("ub"), F.asc("block"))
-            .limit(1)
-            .collect()
-        )
-        if best:
-            probe_rng = int(best[0].block)
-            probe_top = bm25_topk_wand(
-                compressed.filter(F.col("block") == probe_rng),
-                doclen_blocks.filter(F.col("block") == probe_rng),
-                terms, qterms, k, n, avgdl, k1, b, idf_map=idf_map,
-            ).collect()
-            if len(probe_top) >= k:
-                theta0 = float(probe_top[-1].score)
-    th0 = float("-inf") if theta0 is None else float(theta0)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         by_range: dict = {}
@@ -690,11 +447,7 @@ def bm25_topk_wand(
         heap: List[Tuple[float, int]] = []  # local top-k, min-heap of (s, -doc)
         scanned = 0
         for rng in sorted(by_range, key=lambda r: (-ub[r], r)):
-            # th0 stays in force even after the local heap fills: a weak
-            # partition's local k-th score must not REGRESS the threshold
-            # below the probe's global one
-            theta = max(heap[0][0], th0) if len(heap) >= k else th0
-            if ub[rng] < theta:
+            if len(heap) >= k and ub[rng] < heap[0][0]:
                 break  # ub descending: every remaining range is below theta
             scanned += 1
             if rng not in dl_blocks:

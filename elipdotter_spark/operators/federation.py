@@ -205,8 +205,12 @@ def bm25_topk_wand_federated(
                 )
             )
         merged = reduce(lambda a, b: a.unionByName(b), shard_topks)
+        # rounded ordering: a blocks-stale shard scores through Spark's
+        # sum, the others through the numpy kernel — equal docs may differ
+        # in the last ulps, and the k-boundary must not depend on which
+        # path accumulated them
         rows = (
-            merged.orderBy(F.desc("score"), F.asc("doc_id"))
+            merged.orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
             .limit(k)
             .collect()
         )

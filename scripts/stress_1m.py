@@ -85,39 +85,6 @@ def main() -> int:
         .toString()
     )
 
-    # theta-reuse policy for query streams: the previous query's k-th
-    # score warm-starts a refined query (term superset, BM25 monotone in
-    # added terms).  Measure ranges-scanned with vs without the warm
-    # theta; exactness asserted against the exhaustive top-k.
-    q_prev = ["t1", "t800"]
-    prev_top = codec.bm25_topk_wand(comp, dlb, terms, q_prev, 10, n, avgdl).collect()
-    th0 = codec.theta0_for_query_stream(
-        q_prev, float(prev_top[-1].score) if prev_top else None, q, 10, 10,
-        prev_n_results=len(prev_top),
-    )
-
-    def wand_ranges(**kw):
-        rs = (
-            codec.bm25_topk_wand(
-                comp, dlb, terms, q, 10, n, avgdl, with_stats=True, **kw
-            )
-            .withColumn("pid", F.spark_partition_id())
-            .select("pid", "rng_scanned", "rng_total")
-            .distinct()
-            .collect()
-        )
-        return sum(r.rng_scanned for r in rs)
-
-    warm_scanned = wand_ranges(theta0=th0) if th0 is not None else None
-    if th0 is not None:
-        got_warm = [
-            (r.doc_id, round(r.score, 9))
-            for r in codec.bm25_topk_wand(
-                comp, dlb, terms, q, 10, n, avgdl, theta0=th0
-            ).collect()
-        ]
-        assert got_warm == want, "theta-reuse WAND != exhaustive"
-
     # reference-rating scored path at 1M through the published store: an
     # OR query over two mid-rank zipf words — the realistic shape where
     # most root docs hold ONE occurrence of one word (rating upper bound
@@ -194,13 +161,6 @@ def main() -> int:
         "ranges_total": sum(r.rng_total for r in stats),
         "partition_filtered_scan": "PartitionFilters" in plan,
         "exact_vs_exhaustive": True,
-        "theta_reuse": {
-            "prev_query": q_prev,
-            "theta0": th0,
-            "ranges_scanned_cold": sum(r.rng_scanned for r in stats),
-            "ranges_scanned_warm": warm_scanned,
-            "exact": True,
-        },
         "scored_hits_query": qs,
         "scored_hits_pruned_sec_median": round(sorted(scored_pruned)[1], 3),
         "scored_hits_full_sec_median": round(sorted(scored_full)[1], 3),

@@ -13,7 +13,7 @@ evaluation-harness / query-log workload); these tests pin:
 import pytest
 from pyspark.sql import functions as F
 
-from elipdotter_spark.operators import bm25, index_build
+from elipdotter_spark.operators import bm25, codec, index_build
 
 QUERIES = {
     1: ["spark", "fast"],
@@ -65,7 +65,11 @@ def test_batch_equals_per_query(spark, index):
 @pytest.mark.spark
 def test_blockmax_batch_equals_exhaustive(spark, index):
     postings, terms, docstats, n, avgdl = index
-    bm = bm25.build_block_max(postings, docstats, terms, n, avgdl, block_size=64)
+    # span 16: ~4x the ranges of the span-64 table tested below, so more
+    # (query, block) pairs for the prune to skip
+    bm = codec.build_compressed(
+        postings, docstats, terms, n, avgdl, doc_span=16
+    ).select("term", "block", "block_max")
     want = {
         (r.query_id, r.rnk): (r.doc_id, round(r.score, 9))
         for r in bm25.bm25_topk_batch(
@@ -79,7 +83,7 @@ def test_blockmax_batch_equals_exhaustive(spark, index):
         (r.query_id, r.rnk): (r.doc_id, round(r.score, 9))
         for r in bm25.bm25_topk_blockmax_batch(
             postings, docstats, terms, bm, QUERIES, K, n, avgdl,
-            block_size=64, probe_blocks=2,
+            block_size=16, probe_blocks=2,
         ).collect()
     }
     assert got == want
@@ -128,8 +132,6 @@ def test_blockmax_batch_over_compressed_block_stats(spark, index):
     (term, block, block_max) with the SAME range key the batch prune uses —
     so a published store feeds bm25_topk_blockmax_batch directly, no
     separate block_max build.  Prune == exhaustive through that path."""
-    from elipdotter_spark.operators import codec
-
     postings, terms, docstats, n, avgdl = index
     span = 64
     comp = codec.build_compressed(

@@ -1,4 +1,5 @@
-"""BM25: exhaustive vs block-max pruned (distributed + compressed codec)."""
+"""Compressed posting codec: varint/block round-trips, size, and WAND over
+the compressed blocks vs exhaustive BM25."""
 
 import numpy as np
 import pytest
@@ -44,33 +45,21 @@ QTERMS = ["spark", "fast", "table"]
 
 
 @pytest.mark.spark
-def test_blockmax_equals_bruteforce(spark, index):
-    postings, terms, docstats, n, avgdl = index
-    brute = bm25.bm25_topk(postings, docstats, terms, QTERMS, 10, n=n, avgdl=avgdl)
-    bm = bm25.build_block_max(postings, docstats, terms, n, avgdl, block_size=64)
-    pruned = bm25.bm25_topk_blockmax(
-        spark, postings, docstats, terms, bm, QTERMS, 10, n, avgdl,
-        block_size=64, probe_blocks=2,
-    )
-    want = [(r.doc_id, round(r.score, 9)) for r in brute.collect()]
-    got = [(r.doc_id, round(r.score, 9)) for r in pruned.collect()]
-    assert got == want
-
-
-@pytest.mark.spark
 def test_compressed_topk_equals_bruteforce(spark, index):
+    """Block-max WAND over the compressed blocks == exhaustive top-k for a
+    three-term query on the documents fixture."""
     postings, terms, docstats, n, avgdl = index
     comp = codec.build_compressed(
         postings, docstats, terms, n, avgdl, doc_span=64
     ).cache()
-    top, pruned = codec.bm25_topk_compressed(
-        comp, docstats, terms, QTERMS, 10, n, avgdl
-    )
+    dlb = codec.build_doclen_blocks(docstats, doc_span=64).cache()
+    top = codec.bm25_topk_wand(comp, dlb, terms, QTERMS, 10, n, avgdl)
     brute = bm25.bm25_topk(postings, docstats, terms, QTERMS, 10, n=n, avgdl=avgdl)
     want = [(r.doc_id, round(r.score, 9)) for r in brute.collect()]
-    got = [(d, round(s, 9)) for d, s in top]
+    got = [(r.doc_id, round(r.score, 9)) for r in top.collect()]
     assert got == want
-    assert pruned >= 0
+    comp.unpersist()
+    dlb.unpersist()
 
 
 @pytest.mark.spark

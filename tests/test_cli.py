@@ -60,6 +60,52 @@ def test_cli_build_query_bm25(cli, tmp_path, sf_dir, capsys):
 
 
 @pytest.mark.spark
+def test_cli_bm25_wand_stale_blocks_scores_exhaustively(
+    cli, spark, tmp_path, sf_dir, capsys
+):
+    """bm25 --wand on a store whose block tables are stale (a segment
+    ingested after the last block publish) falls back to the exhaustive
+    aggregate: output == in-process bm25_topk row for row, plus a warning."""
+    from elipdotter_spark.operators import bm25
+    from elipdotter_spark.sources.catalog import IndexStore
+
+    idx = str(tmp_path / "idx")
+    store = IndexStore(spark, idx)
+    store.write_segment(
+        "seg-0", spark.read.parquet(f"{sf_dir}/documents.parquet")
+    )
+    store.publish()
+    store.write_segment("seg-1", spark.createDataFrame(
+        [(9000, "table value table freshterm"), (9001, "value freshterm")],
+        "doc_id long, text string",
+    ))
+    store.publish(with_compressed=False)
+    snap = store.snapshot()
+    assert snap.blocks_stale and not snap.stale
+    n, avgdl = snap.corpus_stats()
+    q = ["table", "value", "freshterm"]
+    want = [
+        (r.doc_id, round(r.score, 9))
+        for r in bm25.bm25_topk(
+            store.merged_postings(), snap.published_docstats(),
+            snap.published_terms(), q, 5, n=n, avgdl=avgdl,
+        ).collect()
+    ]
+    capsys.readouterr()
+    assert cli.main([
+        "bm25", "--index", idx, "--terms", ",".join(q), "--k", "5", "--wand",
+    ]) == 0
+    cap = capsys.readouterr()
+    got = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in (json.loads(x) for x in cap.out.splitlines() if x.startswith("{"))
+    ]
+    assert got == want
+    assert 9000 in {d for d, _s in got}  # the unpublished-block doc counts
+    assert "block tables are stale or absent" in cap.err
+
+
+@pytest.mark.spark
 def test_cli_dedup_summary(cli, sf_dir, capsys):
     assert cli.main([
         "dedup", "--input", f"{sf_dir}/documents.parquet",
@@ -729,3 +775,29 @@ def test_docmap_latest_wins_resolution(cli, spark, tmp_path):
         for r in cli._docmap_latest(spark.read.parquet(f"{dm}/batch-*")).collect()
     }
     assert out == {1: "https://a.example/new", 2: "https://b.example/q"}
+
+
+@pytest.mark.spark
+def test_docmap_latest_orders_batches_numerically(cli, spark, tmp_path):
+    """The batch ordinal outgrows its six-digit zero padding: batch-1000000
+    is newer than batch-999999 even though its path sorts first."""
+    dm = str(tmp_path / "dm")
+    spark.createDataFrame([(1, "old")], "doc_id long, url string") \
+        .write.parquet(f"{dm}/batch-999999")
+    spark.createDataFrame([(1, "new")], "doc_id long, url string") \
+        .write.parquet(f"{dm}/batch-1000000")
+    out = {
+        r.doc_id: r.url
+        for r in cli._docmap_latest(spark.read.parquet(f"{dm}/batch-*")).collect()
+    }
+    assert out == {1: "new"}
+    # a single-write docmap (no batch dirs) passes through unchanged
+    single = str(tmp_path / "single")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "doc_id long, url string"
+    ).write.parquet(single)
+    out2 = {
+        r.doc_id: r.url
+        for r in cli._docmap_latest(spark.read.parquet(single)).collect()
+    }
+    assert out2 == {1: "a", 2: "b"}

@@ -100,25 +100,6 @@ def test_wand_on_hashed_ids_equals_exhaustive(spark, hashed_index):
 
 
 @pytest.mark.spark
-def test_compressed_two_phase_on_hashed_ids(hashed_index):
-    _docs, postings, terms, docstats, n, avgdl = hashed_index
-    want = [
-        (r.doc_id, round(r.score, 9))
-        for r in bm25.bm25_topk(
-            postings, docstats, terms, QTERMS, 10, n=n, avgdl=avgdl
-        ).collect()
-    ]
-    span = codec.doc_span_for_sparse(400, docs_per_range=16)
-    comp = codec.build_compressed(
-        postings, docstats, terms, n, avgdl, doc_span=span
-    )
-    top, _pruned = codec.bm25_topk_compressed(
-        comp, docstats, terms, QTERMS, 10, n, avgdl
-    )
-    assert [(d, round(s, 9)) for d, s in top] == want
-
-
-@pytest.mark.spark
 def test_mismatched_doc_span_raises_clearly(hashed_index):
     """Blocks built with different spans must fail loudly (ADVICE r2), not
     KeyError or silently mis-score."""

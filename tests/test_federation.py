@@ -199,3 +199,32 @@ def test_federated_allow_stale_guard(spark, tmp_path):
         )
     # default keeps the (now logged) live fallback working
     assert len(federation.bm25_topk_federated([a, b], ["alpha"], 5).collect()) == 5
+
+
+@pytest.mark.spark
+def test_federated_wand_tie_order_across_scoring_paths(spark, tmp_path):
+    """Identical docs in a fresh shard (numpy WAND kernel) and a blocks-
+    stale shard (Spark sum) score equal only up to the last ulps.  The
+    merged top-k orders on the rounded score, so the k boundary cuts the
+    tie group by doc_id, not by which path accumulated each score."""
+    docs = _corpus(spark)
+    # tfs chosen so the two paths' sums differ in the last ulp (kernel:
+    # (idf*tf)*(k1+1), Spark: idf*(tf*(k1+1))) while rounding equal
+    tie = "alpha " + "beta " * 5 + "gamma " * 3 + "filler1"
+
+    def tied(ids):
+        return spark.createDataFrame(
+            [(i, tie) for i in ids], "doc_id long, text string"
+        )
+
+    a = _store(spark, tmp_path, "ta",
+               docs.filter("doc_id % 2 = 0").unionByName(tied([1000, 1003])))
+    b = _store(spark, tmp_path, "tb", docs.filter("doc_id % 2 = 1"))
+    b.write_segment("seg-tie", tied([1001, 1002]))
+    assert b.snapshot().blocks_stale and not a.snapshot().blocks_stale
+
+    got = federation.bm25_topk_wand_federated(
+        [a, b], ["alpha", "beta", "gamma"], 3
+    ).collect()
+    assert [r.doc_id for r in got] == [1000, 1001, 1002]
+    assert len({round(r.score, 6) for r in got}) == 1

@@ -29,35 +29,6 @@ def test_zipf_skew_present(zipf_index):
 
 
 @pytest.mark.spark
-def test_blockmax_prunes_and_stays_exact(spark, zipf_index):
-    _docs, postings, terms, docstats, n, avgdl = zipf_index
-    # mixed query: one stopword-ish head term + selective tail terms
-    qterms = ["t1", "t800", "t1500"]
-    brute = bm25.bm25_topk(postings, docstats, terms, qterms, 10, n=n, avgdl=avgdl)
-    want = [(r.doc_id, round(r.score, 9)) for r in brute.collect()]
-
-    bmx = bm25.build_block_max(postings, docstats, terms, n, avgdl, block_size=128)
-    pruned_df = bm25.bm25_topk_blockmax(
-        spark, postings, docstats, terms, bmx, qterms, 10, n, avgdl,
-        block_size=128, probe_blocks=8,
-    )
-    got = [(r.doc_id, round(r.score, 9)) for r in pruned_df.collect()]
-    assert got == want
-
-    comp = codec.build_compressed(
-        postings, docstats, terms, n, avgdl, doc_span=128
-    ).cache()
-    top, pruned = codec.bm25_topk_compressed(
-        comp, docstats, terms, qterms, 10, n, avgdl
-    )
-    assert [(d, round(s, 9)) for d, s in top] == want
-    n_ranges = comp.filter(F.col("term").isin(qterms)).select("block").distinct().count()
-    # the threshold must actually skip a meaningful share of doc ranges
-    assert pruned > 0, (pruned, n_ranges)
-    assert pruned / n_ranges > 0.2, (pruned, n_ranges)
-
-
-@pytest.mark.spark
 def test_codec_compression_ratio_on_zipf(zipf_index):
     _docs, postings, terms, docstats, n, avgdl = zipf_index
     comp = codec.build_compressed(postings, docstats, terms, n, avgdl, doc_span=128)
@@ -101,97 +72,3 @@ def test_one_job_partitioned_wand_exact_and_prunes(spark, zipf_index):
     # assert the plan contains the mapInPandas scan and a TakeOrdered
     plan = got_df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "TakeOrderedAndProject" in plan
-
-
-@pytest.mark.spark
-def test_wand_global_probe_exact_and_tighter(spark, zipf_index):
-    """Sampled-global-theta variant: one extra tiny job scores the single
-    highest-ub range and broadcasts its k-th score as every partition's
-    starting threshold — must stay exact and never scan MORE ranges than
-    local thetas alone."""
-    _docs, postings, terms, docstats, n, avgdl = zipf_index
-    qterms = ["t1", "t800", "t1500"]
-    want = [
-        (r.doc_id, round(r.score, 9))
-        for r in bm25.bm25_topk(postings, docstats, terms, qterms, 10, n=n, avgdl=avgdl).collect()
-    ]
-    comp = codec.build_compressed(postings, docstats, terms, n, avgdl, doc_span=64).cache()
-    dlb = codec.build_doclen_blocks(docstats, doc_span=64).cache()
-
-    got = [
-        (r.doc_id, round(r.score, 9))
-        for r in codec.bm25_topk_wand(
-            comp, dlb, terms, qterms, 10, n, avgdl, global_probe=True
-        ).collect()
-    ]
-    assert got == want
-
-    def scanned(**kw):
-        rows = (
-            codec.bm25_topk_wand(comp, dlb, terms, qterms, 10, n, avgdl,
-                                 with_stats=True, **kw)
-            .withColumn("pid", F.spark_partition_id())
-            .select("pid", "rng_scanned")
-            .distinct()
-            .collect()
-        )
-        return sum(r.rng_scanned for r in rows)
-
-    local = scanned()
-    seeded = scanned(global_probe=True)
-    assert seeded <= local, (seeded, local)
-
-
-@pytest.mark.spark
-def test_theta_reuse_query_stream_exact(spark, zipf_index):
-    """Query-stream warm start: a refined query (term superset) seeded with
-    the previous query's k-th score must stay exact and never scan more
-    ranges; unsound reuses (term non-superset, larger k) must be refused."""
-    _docs, postings, terms, docstats, n, avgdl = zipf_index
-    comp = codec.build_compressed(
-        postings, docstats, terms, n, avgdl, doc_span=128
-    ).cache()
-    dlb = codec.build_doclen_blocks(docstats, doc_span=128).cache()
-
-    q_prev, q = ["t1", "t800"], ["t1", "t800", "t1500"]
-    prev = codec.bm25_topk_wand(comp, dlb, terms, q_prev, 10, n, avgdl).collect()
-    th0 = codec.theta0_for_query_stream(
-        q_prev, float(prev[-1].score), q, 10, 10, prev_n_results=len(prev)
-    )
-    assert th0 is not None
-
-    want = [
-        (r.doc_id, round(r.score, 9))
-        for r in bm25.bm25_topk(postings, docstats, terms, q, 10, n=n, avgdl=avgdl).collect()
-    ]
-    got = [
-        (r.doc_id, round(r.score, 9))
-        for r in codec.bm25_topk_wand(
-            comp, dlb, terms, q, 10, n, avgdl, theta0=th0
-        ).collect()
-    ]
-    assert got == want
-
-    def scanned(**kw):
-        rows = (
-            codec.bm25_topk_wand(comp, dlb, terms, q, 10, n, avgdl,
-                                 with_stats=True, **kw)
-            .withColumn("pid", F.spark_partition_id())
-            .select("pid", "rng_scanned")
-            .distinct()
-            .collect()
-        )
-        return sum(r.rng_scanned for r in rows)
-
-    assert scanned(theta0=th0) <= scanned()
-
-    # unsound reuses are refused
-    assert codec.theta0_for_query_stream(["t9"], 1.0, q, 10, 10) is None
-    assert codec.theta0_for_query_stream(q_prev, 1.0, q, 10, 20) is None
-    assert codec.theta0_for_query_stream(q_prev, None, q, 10, 10) is None
-    # ADVICE r4: a previous query that returned FEWER than prev_k rows
-    # means its last score is NOT the prev_k-th bound — reuse refused
-    assert (
-        codec.theta0_for_query_stream(q_prev, 1.0, q, 10, 10, prev_n_results=7)
-        is None
-    )
